@@ -12,8 +12,9 @@ Plan shape (scale rationale):
 - Section triples reuse the conv-partitioned window shuffle computed by
   the ordered stage (explode-shaped: the bounds are derived by a
   window pass that a union would re-run per predicate).
-- topEntity uses the salted two-phase count (operators/salt.py) because
-  conversation sizes are Zipf-skewed.
+- topEntity counts (conv, entity) pairs with the two-phase salted count
+  (operators/salt.py, SALT_BUCKETS sub-keys per pair), so a long
+  conversation's hot pair is split before the final merge.
 - Label pref/alt uses order-aware first-wins windows (operators/dedup.py),
   the distributed analog of seenTitles/seenLangs
   (/root/reference/kernelxmltottl.php:88-89,205-227).
@@ -40,6 +41,9 @@ from .operators.salt import salted_count
 from .operators.sections import section_bounds
 
 TRIPLE_COLS = ("subj", "pred", "obj")
+
+# sub-keys per (conv, entity) pair in the salted topEntity count
+SALT_BUCKETS = 16
 
 
 def _t(subj, pred: str, obj) -> F.Column:
@@ -180,7 +184,7 @@ def mention_triples(linked_canon: DataFrame, entity_iri_map: DataFrame) -> DataF
 
 
 def top_entity_triples(
-    linked_canon: DataFrame, entity_iri_map: DataFrame, salt_buckets: int = 16
+    linked_canon: DataFrame, entity_iri_map: DataFrame
 ) -> DataFrame:
     """(conv, topEntity, entity): max mention count per conversation,
     ties -> numeric-min canonical id. Two-phase salted count because
@@ -189,7 +193,7 @@ def top_entity_triples(
         linked_canon,
         keys=["conv_id", "canon_id"],
         salt_from=["turn_idx", "midx"],
-        buckets=salt_buckets,
+        buckets=SALT_BUCKETS,
     )
     top = (
         counts.withColumn("_pad", pad_id_col(F.col("canon_id")))
@@ -290,8 +294,7 @@ def assemble_triples(
     canonical_map: DataFrame,
     abstract_lookup: DataFrame,
     entity_props: DataFrame,
-    salt_buckets: int = 16,
-    gazetteer: DataFrame | None = None,
+    gazetteer: DataFrame,
 ) -> DataFrame:
     """Union of every family — the global-graph union (U1 analog,
     /root/reference/utils.php:833-840).
@@ -303,25 +306,13 @@ def assemble_triples(
     A trailing distinct would re-shuffle the entire output for nothing
     — at 100 TB that is the single biggest avoidable exchange."""
     mentioned = linked_canon.select("canon_id").distinct()
-    if gazetteer is not None:
-        entity_iri_map = build_entity_iri_map(
-            gazetteer, canonical_map, abstract_lookup
-        )
-    else:  # fall back to the mention stream for the key universe
-        entity_iri_map = mentioned.join(
-            F.broadcast(abstract_lookup), "canon_id", "left"
-        ).select(
-            "canon_id",
-            entity_iri_col(F.col("canon_id"), F.col("abstract_local")).alias(
-                "entity_iri"
-            ),
-        )
+    entity_iri_map = build_entity_iri_map(gazetteer, canonical_map, abstract_lookup)
     fams = [
         turn_triples(turns_with_section),
         conv_triples(turns_with_section),
         section_triples(turns_with_section),
         mention_triples(linked_canon, entity_iri_map),
-        top_entity_triples(linked_canon, entity_iri_map, salt_buckets),
+        top_entity_triples(linked_canon, entity_iri_map),
         label_triples(linked_canon, entity_iri_map),
         entity_prop_triples(
             entity_props, canonical_map, entity_iri_map, mentioned

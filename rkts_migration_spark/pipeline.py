@@ -1,23 +1,29 @@
-"""The checkpointed extract -> link -> canonicalize -> materialize
-pipeline (SURVEY.md §7 stage design).
-
-Stages, each committed as a stage table with per-partition lineage
-(sources/tables.py) before the next starts:
+"""The extract -> link -> canonicalize -> materialize pipeline
+(SURVEY.md §7 stage design) as ONE ordered stage list:
 
   ordered    transcripts + section islands (one conv-partitioned shuffle)
-  mentions   Arrow-batched trie extraction (extract.py)
+  mentions   gazetteer mention extraction (extract.py picks the strategy
+             by surface count)
   linked     gazetteer-scored linking + canonical ids (broadcast joins)
   triples    full (subj, pred, obj) assembly (materialize.py)
 
-Resume: a re-run with the same checkpoint root and ``resume=True``
-skips every stage whose manifest says complete — kill the job between
-stages and the restart reproduces the identical triple set
-(tests/test_pipeline.py::test_resume_reproduces_triples).
+One driver loop (``_drive``) builds them in order; a boundary policy
+decides what each stage boundary does:
+
+- in-memory (``build_triples_inmem``): persist and count ``ordered``
+  and ``linked``; ``mentions`` and ``triples`` stay lazy.
+- commit (``run_pipeline``): write each stage table with per-partition
+  lineage (sources/tables.py), then read it back. With ``resume=True``
+  a re-run starts at the first stage whose manifest is not complete, so
+  a job killed between stages restarts to the identical triple set
+  (tests/test_pipeline.py::test_resume_reproduces_triples).
 """
 
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,40 +38,92 @@ from .sources.tables import read_stage, stage_is_complete, write_stage
 STAGES = ("ordered", "mentions", "linked", "triples")
 
 
-def build_triples_inmem(
-    spark: SparkSession, tables: dict[str, DataFrame], salt_buckets: int = 16
+def _drive(
+    tables: dict[str, DataFrame],
+    todo: tuple[str, ...],
+    boundary: Callable[[str, DataFrame], tuple],
+    load: Callable[[str], DataFrame] | None,
 ) -> DataFrame:
-    """Compose the full pipeline with no checkpoint IO (driver contract
-    and bench; production runs use run_pipeline for resumability).
-
-    ``ordered`` and ``linked`` feed several triple families each, so
-    they are persisted (memory-and-disk) — without this the Python
-    extraction stage would re-run once per family, the same work the
-    checkpointed path avoids by writing stage tables.
+    """Build the stages in ``todo`` (a non-empty run of STAGES) and
+    return the last one's frame; earlier stages a builder reads come
+    from ``load``. ``boundary(stage, df)`` returns the frame
+    downstream stages read and the action that materializes it (None if
+    the policy already did).
 
     The serial driver work — dictionary collect jobs, the union-find
     fixpoint, and the py4j-heavy construction + eager analysis of the
     assemble DAG — is parallelism-INDEPENDENT wall: inline it adds the
     same seconds at every cluster size and caps scaling efficiency
     (measured: ~3s of inter-job driver gaps at 8 cores inside a 24s
-    wall). It only touches the dimension tables, never the transcript
-    stream, so it runs on a background thread overlapped with the two
-    big cache-build actions; the tiny collect jobs slot into free task
-    slots under the FIFO scheduler."""
-    from concurrent.futures import ThreadPoolExecutor
+    wall). So it runs on background threads: the dimension work from
+    the start, and each next stage's plan while the boundary action
+    materializes the current one; the tiny collect jobs slot into free
+    task slots under the FIFO scheduler. The dimension work runs only
+    if a stage after ``ordered`` is built."""
+    gaz = tables["gazetteer"]
+    frames: dict[str, DataFrame] = {}
 
-    ordered = with_section_index(tables["transcripts"]).persist()
+    def frame(stage: str) -> DataFrame:
+        if stage not in frames:
+            frames[stage] = load(stage)
+        return frames[stage]
 
-    def _dimension_work():
+    def dimensions():
+        surfaces = _normalized_surfaces(gaz) if "mentions" in todo else None
         canonical_map = build_canonical_map(
             tables["id_remap"], tables["cross_corpus_map"],
             tables["same_text_map"],
         )
-        surfaces = _normalized_surfaces(tables["gazetteer"])
-        return canonical_map, surfaces
+        return surfaces, canonical_map
 
-    with ThreadPoolExecutor(1) as pool:
-        dim_fut = pool.submit(_dimension_work)
+    def build(stage: str) -> DataFrame:
+        if stage == "ordered":
+            return with_section_index(tables["transcripts"])
+        surfaces, canonical_map = dims.result()
+        if stage == "mentions":
+            return extract_mentions(frame("ordered"), gaz, surfaces)
+        if stage == "linked":
+            # one broadcast join over the mention stream (canonicalization
+            # is pre-composed onto the winners dimension)
+            return link_and_canonicalize(frame("mentions"), gaz, canonical_map)
+        abstract_lookup = build_abstract_lookup(
+            tables["abstract_map"], canonical_map
+        )
+        return assemble_triples(
+            frame("ordered"), frame("linked"), canonical_map, abstract_lookup,
+            tables["entity_props"], gazetteer=gaz,
+        )
+
+    with ThreadPoolExecutor(2) as pool:
+        dims = pool.submit(dimensions) if todo[-1] != "ordered" else None
+        df = build(todo[0])
+        for stage, nxt in zip(todo, todo[1:] + (None,)):
+            frames[stage], materialize = boundary(stage, df)
+            ahead = pool.submit(build, nxt) if nxt else None
+            if materialize:
+                materialize()
+            df = ahead.result() if ahead else None
+    return frames[todo[-1]]
+
+
+def build_triples_inmem(
+    spark: SparkSession, tables: dict[str, DataFrame]
+) -> DataFrame:
+    """Compose the full pipeline with no checkpoint IO (driver contract,
+    bench and micro-batch ingest; production runs use run_pipeline for
+    resumability).
+
+    ``ordered`` and ``linked`` feed several triple families each, so
+    they are persisted (memory-and-disk) — without this the Python
+    extraction stage would re-run once per family, the same work the
+    commit policy avoids by writing stage tables. If a stage raises,
+    whatever was persisted is released before the error propagates."""
+    held: list[DataFrame] = []
+
+    def persist(stage: str, df: DataFrame):
+        if stage not in ("ordered", "linked"):
+            return df, None
+        held.append(df.persist())
         # Eager materialization: the triple families are independent
         # plan branches that AQE submits CONCURRENTLY; left lazy, their
         # tasks race to build the same cache partitions and block on
@@ -74,33 +132,14 @@ def build_triples_inmem(
         # extraction phase). One eager pass each runs extraction
         # exactly once at full parallelism; every family then reads the
         # finished cache.
-        ordered.count()
-        canonical_map, surfaces = dim_fut.result()
+        return df, df.count
 
-    mentions = extract_mentions(ordered, tables["gazetteer"], surfaces)
-    # one broadcast join over the mention stream (canonicalization is
-    # pre-composed onto the winners dimension — see link_and_canonicalize)
-    linked = link_and_canonicalize(
-        mentions, tables["gazetteer"], canonical_map
-    ).persist()
-
-    def _assemble_dag():
-        abstract_lookup = build_abstract_lookup(
-            tables["abstract_map"], canonical_map
-        )
-        return assemble_triples(
-            ordered, linked, canonical_map, abstract_lookup,
-            tables["entity_props"], salt_buckets=salt_buckets,
-            gazetteer=tables["gazetteer"],
-        )
-
-    with ThreadPoolExecutor(1) as pool:
-        # the assemble DAG is hundreds of Column expressions (py4j
-        # round-trips) + eager Catalyst analysis of the union plan —
-        # build it while the linked cache materializes
-        dag_fut = pool.submit(_assemble_dag)
-        linked.count()
-        return dag_fut.result()
+    try:
+        return _drive(tables, STAGES, persist, None)
+    except BaseException:
+        for df in held:
+            df.unpersist()
+        raise
 
 
 @dataclass
@@ -116,79 +155,29 @@ def run_pipeline(
     checkpoint_root: str,
     run_id: str | None = None,
     resume: bool = True,
-    salt_buckets: int = 16,
     stop_after: str | None = None,
 ) -> RunResult:
-    """Run (or resume) the full pipeline; returns the triples DataFrame.
+    """Run (or resume) the full pipeline; returns the triples DataFrame
+    and the manifests of the stages committed in this run.
 
     ``tables`` needs: transcripts, gazetteer, id_remap, cross_corpus_map,
     same_text_map, abstract_map, entity_props.
-    ``stop_after`` lets tests kill the run at a stage boundary.
+    ``stop_after`` lets tests kill the run at a stage boundary; the
+    result then holds that stage's table.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     manifests: dict[str, dict] = {}
+    target = stop_after or STAGES[-1]
+    todo = STAGES[: STAGES.index(target) + 1]
+    while resume and todo and stage_is_complete(checkpoint_root, todo[0]):
+        todo = todo[1:]
 
-    def done(stage: str) -> bool:
-        return resume and stage_is_complete(checkpoint_root, stage)
+    def load(stage: str) -> DataFrame:
+        return read_stage(spark, checkpoint_root, stage)
 
-    # -- stage: ordered ------------------------------------------------
-    if done("ordered"):
-        ordered = read_stage(spark, checkpoint_root, "ordered")
-    else:
-        ordered = with_section_index(tables["transcripts"])
-        manifests["ordered"] = write_stage(
-            ordered, checkpoint_root, "ordered", run_id
-        )
-        ordered = read_stage(spark, checkpoint_root, "ordered")
-    if stop_after == "ordered":
-        return RunResult(run_id, ordered, manifests)
+    def commit(stage: str, df: DataFrame):
+        manifests[stage] = write_stage(df, checkpoint_root, stage, run_id)
+        return load(stage), None
 
-    # -- stage: mentions -----------------------------------------------
-    if done("mentions"):
-        mentions = read_stage(spark, checkpoint_root, "mentions")
-    else:
-        mentions = extract_mentions(ordered, tables["gazetteer"])
-        manifests["mentions"] = write_stage(
-            mentions, checkpoint_root, "mentions", run_id
-        )
-        mentions = read_stage(spark, checkpoint_root, "mentions")
-    if stop_after == "mentions":
-        return RunResult(run_id, mentions, manifests)
-
-    # -- stage: linked (+ canonical ids) --------------------------------
-    canonical_map = build_canonical_map(
-        tables["id_remap"], tables["cross_corpus_map"], tables["same_text_map"]
-    )
-    if done("linked"):
-        linked = read_stage(spark, checkpoint_root, "linked")
-    else:
-        linked = link_and_canonicalize(
-            mentions, tables["gazetteer"], canonical_map
-        )
-        manifests["linked"] = write_stage(
-            linked, checkpoint_root, "linked", run_id
-        )
-        linked = read_stage(spark, checkpoint_root, "linked")
-    if stop_after == "linked":
-        return RunResult(run_id, linked, manifests)
-
-    # -- stage: triples --------------------------------------------------
-    abstract_lookup = build_abstract_lookup(tables["abstract_map"], canonical_map)
-    if done("triples"):
-        triples = read_stage(spark, checkpoint_root, "triples")
-    else:
-        triples = assemble_triples(
-            ordered,
-            linked,
-            canonical_map,
-            abstract_lookup,
-            tables["entity_props"],
-            salt_buckets=salt_buckets,
-            gazetteer=tables["gazetteer"],
-        )
-        manifests["triples"] = write_stage(
-            triples, checkpoint_root, "triples", run_id
-        )
-        triples = read_stage(spark, checkpoint_root, "triples")
-
+    triples = _drive(tables, todo, commit, load) if todo else load(target)
     return RunResult(run_id, triples, manifests)

@@ -12,6 +12,44 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The measured session settings the pipeline's speed depends on, in one
+# place: get_spark applies them and so does the standalone-cluster
+# builder in scripts/cluster_bench.py (tests/test_plans.py pins them).
+PERF_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # InferFiltersFromGenerate re-derives `size(expr) > 0 AND
+    # isnotnull(expr)` below every explode and filter-pushdown then
+    # substitutes the generator's FULL child expression into the
+    # condition — for the mention-extraction Generate that means
+    # the gazetteer alternation regex runs 3x per turn instead of
+    # once (measured: the explode stage drops 9.05 s -> 2.92 s at
+    # local[8] on the sf0.1 scaling input with the rule excluded).
+    # Semantics are identical: a non-outer explode drops
+    # empty/null arrays by itself; the inferred filter exists only
+    # to enable further pushdown, which none of our plans use.
+    "spark.sql.optimizer.excludedRules":
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # The in-memory columnar cache encodes/decodes in batches of
+    # this many rows (default 10,000). The flagship persists two
+    # corpus-sized intermediates (ordered, linked) that every
+    # triple family re-reads, so per-batch setup (compression-
+    # codec init, batch allocation, accessor dispatch) is paid
+    # ~O(rows/batchSize) times per column per consumer. 65,536
+    # measured: linked cache build -19%, full flagship -11% at
+    # local[8] and -14% at local[8] on the 8x scaling input, a
+    # wash at local[2] (narrow runs are bandwidth-slack, not
+    # overhead-bound). Memory stays bounded: one batch buffers
+    # 64Ki rows x bytes/column per task (~10-15 MB for our widest
+    # text column) and compression stays ON — unlike disabling
+    # compression, which measured SLOWER end-to-end (bigger cache
+    # -> more bytes through the bus on every downstream read).
+    "spark.sql.inMemoryColumnarStorage.batchSize": "65536",
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def get_spark(
     app_name: str = "spark-kg-construct",
@@ -39,40 +77,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate re-derives `size(expr) > 0 AND
-        # isnotnull(expr)` below every explode and filter-pushdown then
-        # substitutes the generator's FULL child expression into the
-        # condition — for the mention-extraction Generate that means
-        # the gazetteer alternation regex runs 3x per turn instead of
-        # once (measured: the explode stage drops 9.05 s -> 2.92 s at
-        # local[8] on the sf0.1 scaling input with the rule excluded).
-        # Semantics are identical: a non-outer explode drops
-        # empty/null arrays by itself; the inferred filter exists only
-        # to enable further pushdown, which none of our plans use.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        # The in-memory columnar cache encodes/decodes in batches of
-        # this many rows (default 10,000). The flagship persists two
-        # corpus-sized intermediates (ordered, linked) that every
-        # triple family re-reads, so per-batch setup (compression-
-        # codec init, batch allocation, accessor dispatch) is paid
-        # ~O(rows/batchSize) times per column per consumer. 65,536
-        # measured: linked cache build -19%, full flagship -11% at
-        # local[8] and -14% at local[8] on the 8x scaling input, a
-        # wash at local[2] (narrow runs are bandwidth-slack, not
-        # overhead-bound). Memory stays bounded: one batch buffers
-        # 64Ki rows x bytes/column per task (~10-15 MB for our widest
-        # text column) and compression stays ON — unlike disabling
-        # compression, which measured SLOWER end-to-end (bigger cache
-        # -> more bytes through the bus on every downstream read).
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=PERF_CONF)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

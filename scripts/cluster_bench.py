@@ -68,38 +68,7 @@ def down() -> None:
 
 
 def run_level(n_exec: int) -> dict:
-    from pyspark.sql import SparkSession
-
-    subprocess.run(
-        ["zip", "-qr", "/tmp/kg_pkg.zip", "rkts_migration_spark"],
-        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        check=True)
-    spark = (
-        SparkSession.builder.appName(f"kg-cluster-{n_exec}x")
-        .master(MASTER_URL)
-        .config("spark.executor.cores", str(CORES_PER_EXEC))
-        .config("spark.cores.max", str(CORES_PER_EXEC * n_exec))
-        .config("spark.executor.memory", "5g")
-        .config("spark.submit.pyFiles", "/tmp/kg_pkg.zip")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-        # same cache batch size as session.get_spark (measured there)
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # same exclusion as session.get_spark: the inferred Generate
-        # filter triples the extraction-regex evaluations (see there)
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = _cluster_session(n_exec)
     from rkts_migration_spark.fixtures import fixtures_to_spark, make_fixtures
     from rkts_migration_spark.pipeline import build_triples_inmem
     from scripts.scaling_bench import _prepare_input
@@ -138,35 +107,34 @@ def run_level(n_exec: int) -> dict:
 
 
 def _cluster_session(n_exec: int):
+    """A session on the standalone cluster with ``n_exec`` executors and
+    the package shipped as --py-files; the pipeline's measured perf
+    settings come from session.PERF_CONF, as in get_spark."""
     from pyspark.sql import SparkSession
+
+    from rkts_migration_spark.session import PERF_CONF
 
     subprocess.run(
         ["zip", "-qr", "/tmp/kg_pkg.zip", "rkts_migration_spark"],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         check=True)
-    return (
-        SparkSession.builder.appName(f"kg-cluster-headliners-{n_exec}x")
+    spark = (
+        SparkSession.builder.appName(f"kg-cluster-{n_exec}x")
         .master(MASTER_URL)
         .config("spark.executor.cores", str(CORES_PER_EXEC))
         .config("spark.cores.max", str(CORES_PER_EXEC * n_exec))
         .config("spark.executor.memory", "5g")
         .config("spark.submit.pyFiles", "/tmp/kg_pkg.zip")
         .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8MB")
-        # same cache batch size as session.get_spark (measured there)
-        .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=PERF_CONF)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", "4g")
         .getOrCreate()
     )
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
 
 
 def bench_headliners(n_exec: int) -> int:
@@ -178,7 +146,6 @@ def bench_headliners(n_exec: int) -> int:
     import time as _t
 
     spark = _cluster_session(n_exec)
-    spark.sparkContext.setLogLevel("WARN")
     from rkts_migration_spark import queries as _q
     from rkts_migration_spark import queries_ext  # noqa: F401
     from rkts_migration_spark import queries_kg  # noqa: F401

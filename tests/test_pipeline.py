@@ -9,7 +9,7 @@ import pytest
 
 from rkts_migration_spark.fixtures import fixtures_to_spark, make_fixtures
 from rkts_migration_spark.oracle import precision_recall, run_oracle
-from rkts_migration_spark.pipeline import run_pipeline
+from rkts_migration_spark.pipeline import STAGES, run_pipeline
 from rkts_migration_spark.sources.tables import stage_manifest
 
 
@@ -46,16 +46,45 @@ def test_pipeline_matches_oracle(spark, fx, oracle_triples, tmpdir_ckpt):
         assert sum(x["rows"] for x in m["partitions"]) == m["rows"]
 
 
-def test_resume_reproduces_triples(spark, fx, oracle_triples, tmpdir_ckpt):
+@pytest.mark.parametrize("stop_after", ["ordered", "mentions", "linked"])
+def test_resume_reproduces_triples(
+    spark, fx, oracle_triples, tmpdir_ckpt, stop_after
+):
     tables = fixtures_to_spark(spark, fx)
-    # run 1: killed after the linked stage
-    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a", stop_after="linked")
-    assert stage_manifest(tmpdir_ckpt, "linked")["run_id"] == "a"
+    # run 1: killed after the stop_after stage
+    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a", stop_after=stop_after)
+    kept = STAGES[: STAGES.index(stop_after) + 1]
+    assert stage_manifest(tmpdir_ckpt, stop_after)["run_id"] == "a"
     assert stage_manifest(tmpdir_ckpt, "triples") is None
     # run 2: resumes — completed stages are NOT recomputed
     res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=True)
-    assert stage_manifest(tmpdir_ckpt, "linked")["run_id"] == "a"  # kept
+    assert list(res.manifests) == [s for s in STAGES if s not in kept]
+    for stage in kept:
+        assert stage_manifest(tmpdir_ckpt, stage)["run_id"] == "a"
     assert stage_manifest(tmpdir_ckpt, "triples")["run_id"] == "b"
+    got = _collect_triples(res.triples)
+    p, r = precision_recall(got, oracle_triples)
+    assert p == 1.0 and r == 1.0
+
+
+def test_full_resume_runs_no_dictionary_job(
+    spark, fx, oracle_triples, tmpdir_ckpt, monkeypatch
+):
+    """With every stage committed, a resume only reads the triples
+    table: the dimension work (gazetteer collect, union-find) must not
+    run at all."""
+    from rkts_migration_spark import pipeline
+
+    tables = fixtures_to_spark(spark, fx)
+    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a")
+
+    def boom(*_a, **_kw):
+        raise AssertionError("dimension work ran on a full resume")
+
+    monkeypatch.setattr(pipeline, "build_canonical_map", boom)
+    monkeypatch.setattr(pipeline, "_normalized_surfaces", boom)
+    res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=True)
+    assert res.manifests == {}
     got = _collect_triples(res.triples)
     p, r = precision_recall(got, oracle_triples)
     assert p == 1.0 and r == 1.0
@@ -123,8 +152,9 @@ def test_inmem_background_dimension_error_propagates(spark, fx, monkeypatch):
     """build_triples_inmem runs the dimension work (gazetteer collect,
     union-find) on a background thread overlapped with the ordered
     cache build; a failure there must surface as the original loud
-    error at the call site, not a hang or a downstream symptom. Pin it
-    with the gazetteer-cap guard raised from the background thread."""
+    error at the call site, not a hang or a downstream symptom, and
+    leave nothing persisted. Pin it with the gazetteer-cap guard raised
+    from the background thread."""
     import pytest as _pytest
 
     from rkts_migration_spark import extract
@@ -132,5 +162,9 @@ def test_inmem_background_dimension_error_propagates(spark, fx, monkeypatch):
 
     monkeypatch.setattr(extract, "MAX_GAZETTEER_SURFACES", 2)
     tables = fixtures_to_spark(spark, fx)
+    spark.catalog.clearCache()  # earlier tests' caches are not ours
     with _pytest.raises(ValueError, match="distributed strategy"):
         build_triples_inmem(spark, tables)
+    # the ordered cache built before the error is released, not leaked
+    # into the session
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()

@@ -150,19 +150,22 @@ def test_merge_triples_is_anti_join_no_broadcast_of_existing(spark):
 
 
 def test_session_perf_contract(spark):
-    """The two measured perf-critical session settings are part of the
-    factory's contract (BENCH/BASELINE.md round-5 section): the
+    """The measured perf session settings (session.PERF_CONF, shared
+    with the standalone-cluster builder) are part of the factory's
+    contract (BENCH/BASELINE.md round-5 section), above all the
     InferFiltersFromGenerate exclusion (the inferred size()>0 filter
     re-evaluates the gazetteer alternation regex 3x per turn) and the
     64Ki columnar-cache batch size (the 10k default pays per-batch
     setup O(rows/batchSize) per column per consumer on the two
     corpus-sized persisted intermediates; -11-14% flagship measured).
     A silent revert of either would ship a measured regression."""
-    assert "InferFiltersFromGenerate" in spark.conf.get(
-        "spark.sql.optimizer.excludedRules"
-    )
-    assert spark.conf.get(
-        "spark.sql.inMemoryColumnarStorage.batchSize") == "65536"
+    from rkts_migration_spark.session import PERF_CONF
+
+    assert "InferFiltersFromGenerate" in PERF_CONF[
+        "spark.sql.optimizer.excludedRules"]
+    assert PERF_CONF["spark.sql.inMemoryColumnarStorage.batchSize"] == "65536"
+    for key, value in PERF_CONF.items():
+        assert spark.conf.get(key) == value, key
     # compression must stay ON: disabling it measured SLOWER
     # end-to-end (bigger cache -> more bus bytes per downstream read)
     assert spark.conf.get(
