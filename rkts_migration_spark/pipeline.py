@@ -14,9 +14,11 @@ decides what each stage boundary does:
   and ``linked``; ``mentions`` and ``triples`` stay lazy.
 - commit (``run_pipeline``): write each stage table with per-partition
   lineage (sources/tables.py), then read it back. With ``resume=True``
-  a re-run starts at the first stage whose manifest is not complete, so
-  a job killed between stages restarts to the identical triple set
-  (tests/test_pipeline.py::test_resume_reproduces_triples).
+  a re-run starts at the first stage not committed from the run's
+  transcript files (manifest missing, torn, incomplete, or recording
+  other input files), so a job killed between stages restarts to the
+  identical triple set (tests/test_pipeline.py) and a changed input is
+  recomputed.
 """
 
 from __future__ import annotations
@@ -32,8 +34,9 @@ from .canonicalize import build_abstract_lookup, build_canonical_map
 from .extract import _normalized_surfaces, extract_mentions
 from .link import link_and_canonicalize
 from .materialize import assemble_triples
+from .operators.caching import attach_cached_deps
 from .operators.sections import with_section_index
-from .sources.tables import read_stage, stage_is_complete, write_stage
+from .sources.tables import input_identity, read_stage, stage_is_current, write_stage
 
 STAGES = ("ordered", "mentions", "linked", "triples")
 
@@ -116,8 +119,11 @@ def build_triples_inmem(
     ``ordered`` and ``linked`` feed several triple families each, so
     they are persisted (memory-and-disk) — without this the Python
     extraction stage would re-run once per family, the same work the
-    commit policy avoids by writing stage tables. If a stage raises,
-    whatever was persisted is released before the error propagates."""
+    commit policy avoids by writing stage tables. They are attached to
+    the result (operators/caching.py): release them with
+    ``release_cached_deps`` once the caller's actions on it are done.
+    If a stage raises, whatever was persisted is released before the
+    error propagates."""
     held: list[DataFrame] = []
 
     def persist(stage: str, df: DataFrame):
@@ -135,7 +141,7 @@ def build_triples_inmem(
         return df, df.count
 
     try:
-        return _drive(tables, STAGES, persist, None)
+        return attach_cached_deps(_drive(tables, STAGES, persist, None), held)
     except BaseException:
         for df in held:
             df.unpersist()
@@ -167,16 +173,19 @@ def run_pipeline(
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     manifests: dict[str, dict] = {}
+    inputs = input_identity(tables["transcripts"])
     target = stop_after or STAGES[-1]
     todo = STAGES[: STAGES.index(target) + 1]
-    while resume and todo and stage_is_complete(checkpoint_root, todo[0]):
+    while resume and todo and stage_is_current(
+            spark, checkpoint_root, todo[0], inputs):
         todo = todo[1:]
 
     def load(stage: str) -> DataFrame:
         return read_stage(spark, checkpoint_root, stage)
 
     def commit(stage: str, df: DataFrame):
-        manifests[stage] = write_stage(df, checkpoint_root, stage, run_id)
+        manifests[stage] = write_stage(
+            df, checkpoint_root, stage, run_id, inputs)
         return load(stage), None
 
     triples = _drive(tables, todo, commit, load) if todo else load(target)

@@ -2,46 +2,55 @@
 
 Iceberg (`spark.write.format("iceberg")`) is the production format for
 the triple/stage tables per BASELINE north_rule; when the runtime jar
-is absent (this sandbox) the fallback writes parquet into a temp dir
-and renames it into place, then writes the manifest LAST — a reader
-treats a stage as committed only when the manifest exists, so partial
-writes are never resumed from. Same contract, either backend.
+is absent (as in local test runs) the fallback writes parquet into a tmp dir
+and swaps it into place, then writes the manifest LAST, atomically
+(sources/fs.py: every step goes through the Hadoop FileSystem API). A
+stage is committed iff a parseable manifest with ``complete: true``
+exists, and a resume also requires the manifest's ``inputs`` (the
+transcript files, with lengths and modification times) to match the
+run's: a partial write, a torn manifest or changed input files are
+recomputed, never resumed from. Same contract, either backend.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
+import functools
+import logging
+import posixpath
 import time
-import uuid
+from urllib.parse import unquote
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .fs import ls, read_json, swap_in, write_json
+
 MANIFEST = "_STAGE_MANIFEST.json"
+log = logging.getLogger(__name__)
+
+
+@functools.cache
+def _iceberg_on_classpath(jvm) -> bool:
+    # an attribute probe: Class.forName marshals a
+    # ClassNotFoundException through py4j, ~10x slower
+    return isinstance(jvm.org.apache.iceberg.spark.source.IcebergSource, JavaClass)
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.IcebergSource"
-        )
-        return True
-    except Exception:
-        return False
+    """Whether the Iceberg runtime is on the classpath, probed once per
+    JVM: it is asked on every stage write and read."""
+    return _iceberg_on_classpath(spark._jvm)  # noqa: SLF001
 
 
-def stage_path(root: str, stage: str) -> str:
-    return os.path.join(root, stage)
+def _manifest(spark: SparkSession, root: str, stage: str) -> dict | None:
+    return read_json(spark, posixpath.join(root, stage, MANIFEST))
 
 
 def stage_manifest(root: str, stage: str) -> dict | None:
-    p = os.path.join(stage_path(root, stage), MANIFEST)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+    """The stage's manifest (active session); None when it is missing
+    or torn."""
+    return _manifest(SparkSession.getActiveSession(), root, stage)
 
 
 def stage_is_complete(root: str, stage: str) -> bool:
@@ -49,14 +58,43 @@ def stage_is_complete(root: str, stage: str) -> bool:
     return bool(m and m.get("complete"))
 
 
+def input_identity(df: DataFrame) -> list[list]:
+    """[file, length, modification time] of each file ``df`` reads,
+    from a listing of their directories; empty when it reads none
+    (e.g. a createDataFrame frame)."""
+    files = {unquote(f) for f in df.inputFiles()}  # URIs, percent-escaped
+    return sorted(
+        [f"{d}/{name}", size, mtime]
+        for d in {f.rsplit("/", 1)[0] for f in files}
+        for name, size, mtime in ls(df.sparkSession, d)
+        if f"{d}/{name}" in files
+    )
+
+
+def stage_is_current(
+    spark: SparkSession, root: str, stage: str, inputs: list
+) -> bool:
+    """Whether ``stage`` is committed from ``inputs`` (see
+    input_identity); logs why a complete manifest is not trusted."""
+    m = _manifest(spark, root, stage)
+    if not (m and m.get("complete")):
+        return False
+    if m.get("inputs") != inputs:
+        log.warning("stage %s under %s was committed from other input "
+                    "files; recomputing it", stage, root)
+        return False
+    return True
+
+
 def write_stage(
     df: DataFrame,
     root: str,
     stage: str,
     run_id: str,
-    partition_by: list[str] | None = None,
+    inputs: list | None = None,
 ) -> dict:
     """Write a stage table + lineage manifest; returns the manifest.
+    ``inputs`` is the run's input identity, recorded for resume checks.
 
     Lineage = per-output-partition row counts (spark_partition_id), the
     per-partition accounting BASELINE north_rule requires. Computed in
@@ -65,26 +103,19 @@ def write_stage(
     for counts, but per-partition needs the id column, so we stamp it).
     """
     spark = df.sparkSession
-    path = stage_path(root, stage)
+    path = posixpath.join(root, stage)
     stamped = df.withColumn("_part_id", F.spark_partition_id())
-    tmp = path + f"._tmp_{uuid.uuid4().hex[:8]}"
     t0 = time.time()
 
     if _has_iceberg(spark):
         # Production path: Iceberg table, atomic snapshot commit.
-        writer = stamped.write.format("iceberg").mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
+        stamped.write.format("iceberg").mode("overwrite").save(path)
         written = spark.read.format("iceberg").load(path)
     else:
-        writer = stamped.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
+        # a fixed tmp name: the overwrite clears a crashed write's leftovers
+        tmp = f"{path}._tmp"
+        stamped.write.mode("overwrite").parquet(tmp)
+        swap_in(spark, tmp, path)
         written = spark.read.parquet(path)
 
     lineage = [
@@ -93,31 +124,24 @@ def write_stage(
         .agg(F.count(F.lit(1)).alias("rows"))
         .collect()
     ]
-    try:  # stage metrics: on-disk footprint (parquet fallback path)
-        n_bytes = sum(
-            os.path.getsize(os.path.join(dp, fn))
-            for dp, _, fns in os.walk(path) for fn in fns
-        )
-    except OSError:
-        n_bytes = None
     manifest = {
         "stage": stage,
         "run_id": run_id,
         "complete": True,
+        "inputs": inputs or [],
         "rows": sum(p["rows"] for p in lineage),
         "n_partitions": len(lineage),
         "partitions": sorted(lineage, key=lambda p: p["partition_id"]),
         "metrics": {"write_wall_sec": round(time.time() - t0, 3),
-                    "bytes": n_bytes},
+                    "bytes": sum(n for _, n, _ in ls(spark, path, "part-"))},
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1)
+    write_json(spark, posixpath.join(path, MANIFEST), manifest)
     return manifest
 
 
 def read_stage(spark: SparkSession, root: str, stage: str) -> DataFrame:
-    path = stage_path(root, stage)
+    path = posixpath.join(root, stage)
     if _has_iceberg(spark):
         try:
             return spark.read.format("iceberg").load(path).drop("_part_id")

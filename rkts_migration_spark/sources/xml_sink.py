@@ -17,9 +17,11 @@ per collection, items in source order, text fields escaped with
    text partitioned by collection — every part file holds a contiguous
    ordinal range, so lexicographic part-file order IS document order;
 3. a driver-side stitch concatenates each collection's part files
-   between the XML header and ``</outline>`` footer through the
-   Hadoop FileSystem API, so it works for any supported scheme
-   (file://, hdfs://, s3a://), one part file in memory at a time.
+   between the XML header and ``</outline>`` footer into a tmp file
+   and swaps it into place (sources/fs.py), all through the Hadoop
+   FileSystem API, so it works for any supported scheme (file://,
+   hdfs://, s3a://), one part file in memory at a time, and a crash
+   never leaves a truncated ``.xml``.
 
 The text datasource is line-oriented, so fragments must reach it
 newline-free. Raw ``\\n``/``\\r`` in TEXT CONTENT are rewritten to the
@@ -45,6 +47,8 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .fs import fs_for, ls, swap_in
+
 XML_HEADER = (
     '<?xml version="1.0" encoding="UTF-8"?><outline>'
     "<name>rKTs</name><note>exported from SQL</note>"
@@ -62,16 +66,6 @@ def xml_opt_tag(tag: str, escaped: Column) -> Column:
     return F.when(escaped.isNull(), F.lit("")).otherwise(
         F.concat(F.lit(f"<{tag}>"), escaped, F.lit(f"</{tag}>"))
     )
-
-
-def _hadoop_fs(df: DataFrame, path: str):
-    """(FileSystem, Path-class, jvm) for ``path`` via the session's
-    Hadoop configuration — scheme-agnostic (file://, hdfs://, s3a://)."""
-    spark = df.sparkSession
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, jvm.org.apache.hadoop.fs.Path, jvm
 
 
 def write_xml_outline(
@@ -124,15 +118,10 @@ def write_xml_outline(
     if not stitch:
         return {}
 
-    fs, Path, jvm = _hadoop_fs(df, frag_dir)
-    to_bytes = jvm.org.apache.commons.io.IOUtils.toByteArray
+    spark = df.sparkSession
+    to_bytes = spark._jvm.org.apache.commons.io.IOUtils.toByteArray
     out: dict[str, str] = {}
-    part_dirs = sorted(
-        (str(st.getPath().getName()), st.getPath())
-        for st in fs.listStatus(Path(frag_dir))
-        if str(st.getPath().getName()).startswith("coll=")
-    )
-    for entry, entry_path in part_dirs:
+    for entry, _, _ in ls(spark, frag_dir, "coll="):
         # Spark percent-escapes partition values in dir names
         # (spaces, '=', '/', ...); undo it so dict keys and file
         # names carry the raw collection value
@@ -140,16 +129,12 @@ def write_xml_outline(
         # raw value is the dict key; the FILE name keeps '/' escaped
         # (a raw slash would nest directories)
         dst = posixpath.join(out_dir, f"{coll.replace('/', '%2F')}.xml")
-        parts = sorted(
-            (str(st.getPath().getName()), st.getPath())
-            for st in fs.listStatus(entry_path)
-            if str(st.getPath().getName()).startswith("part-")
-        )
-        w = fs.create(Path(dst), True)
+        fs, tmp = fs_for(spark, f"{dst}._tmp")
+        w = fs.create(tmp, True)
         try:
             w.write(bytearray(header.encode("utf-8")))
-            for _, ppath in parts:
-                r = fs.open(ppath)
+            for part, _, _ in ls(spark, f"{frag_dir}/{entry}", "part-"):
+                r = fs.open(fs_for(spark, f"{frag_dir}/{entry}/{part}")[1])
                 try:
                     # one part file at a time; fragments are
                     # newline-free by construction, so dropping the
@@ -161,5 +146,6 @@ def write_xml_outline(
             w.write(bytearray(footer.encode("utf-8")))
         finally:
             w.close()
+        swap_in(spark, f"{dst}._tmp", dst)
         out[coll] = dst
     return out

@@ -19,8 +19,18 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..operators.caching import cached_deps, release_cached_deps
+from ..operators.graph import (
+    TRIPLE_BUCKET_COL,
+    compact_labels,
+    merge_triples,
+    prune_store_to_touched,
+    with_triple_bucket,
+)
 from ..pipeline import build_triples_inmem
+from ..sources.fs import fs_for, ls, swap_in, write_json
 
 
 def stream_triples(
@@ -41,8 +51,8 @@ def stream_triples(
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
         tables = dict(dict_tables)
         tables["transcripts"] = batch_df
-        triples = build_triples_inmem(batch_df.sparkSession, tables)
-        sink(triples, batch_id)
+        with cached_deps(build_triples_inmem(batch_df.sparkSession, tables)) as triples:
+            sink(triples, batch_id)
 
     writer = (
         transcript_stream.writeStream.foreachBatch(per_batch)
@@ -54,37 +64,6 @@ def stream_triples(
     return writer.start()
 
 
-def _fs_write_json(spark: SparkSession, path: str, payload: dict) -> None:
-    """Write a small JSON file through the Hadoop FileSystem API, so
-    manifests share the store's scheme (file://, hdfs://, s3a://) —
-    driver-local os.makedirs/open would land manifests in a bogus
-    local directory when the store is remote (ADVICE r3). Parent
-    directories are created by FileSystem.create.
-
-    Uses a PRIVATE FileSystem instance (newInstance, closed after the
-    write): setWriteChecksum on the process-wide cached instance would
-    disable checksums for every later write on that scheme — streaming
-    checkpoint/WAL files included — not just this manifest (ADVICE r4).
-    The flag here only suppresses .crc sidecars next to the manifest
-    (LocalFileSystem writes them by default; object stores / HDFS
-    checksum internally)."""
-    import json
-
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.FileSystem.newInstance(jpath.toUri(), conf)
-    try:
-        fs.setWriteChecksum(False)
-        out = fs.create(jpath, True)
-        try:
-            out.write(bytearray(json.dumps(payload).encode("utf-8")))
-        finally:
-            out.close()
-    finally:
-        fs.close()
-
-
 def _store_scan_stats(
     spark: SparkSession, store_dir: str, touched: list[int]
 ) -> dict:
@@ -93,35 +72,15 @@ def _store_scan_stats(
     under the touched ones. Listing cost is bounded: one listStatus of
     the store root (<= n_buckets entries) + one per TOUCHED bucket
     (∝ batch, never ∝ store)."""
-    from ..operators.graph import TRIPLE_BUCKET_COL
-
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(store_dir)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    prefix = f"{TRIPLE_BUCKET_COL}="
-    bucket_dirs = {
-        str(st.getPath().getName()): st.getPath()
-        for st in fs.listStatus(root)
-        if str(st.getPath().getName()).startswith(prefix)
-    }
-    files_read = 0
-    bytes_read = 0
-    read_dirs = 0
-    for b in touched:
-        p = bucket_dirs.get(f"{prefix}{b}")
-        if p is None:
-            continue
-        read_dirs += 1
-        for st in fs.listStatus(p):
-            if str(st.getPath().getName()).startswith("part-"):
-                files_read += 1
-                bytes_read += st.getLen()
+    buckets = {name for name, _, _ in ls(spark, store_dir, f"{TRIPLE_BUCKET_COL}=")}
+    read = [f"{TRIPLE_BUCKET_COL}={b}" for b in touched]
+    parts = [f for name in read if name in buckets
+             for f in ls(spark, f"{store_dir}/{name}", "part-")]
     return {
-        "store_buckets_total": len(bucket_dirs),
-        "store_buckets_read": read_dirs,
-        "store_files_read": files_read,
-        "store_bytes_read": bytes_read,
+        "store_buckets_total": len(buckets),
+        "store_buckets_read": len(buckets.intersection(read)),
+        "store_files_read": len(parts),
+        "store_bytes_read": sum(size for _, size, _ in parts),
     }
 
 
@@ -180,14 +139,6 @@ def stream_kg_ingest(
     import uuid
 
     from pyspark.errors import AnalysisException
-    from pyspark.sql import functions as F
-
-    from ..operators.graph import (
-        TRIPLE_BUCKET_COL,
-        merge_triples,
-        prune_store_to_touched,
-        with_triple_bucket,
-    )
 
     # namespace the manifests per stream RUN: batch ids restart at 0
     # for every new checkpoint, so two runs against the same store
@@ -260,7 +211,7 @@ def stream_kg_ingest(
             delta.select(cols).write.mode("append").parquet(store_dir)
         delta.unpersist()
         inc.unpersist()
-        _fs_write_json(
+        write_json(
             spark,
             f"{store_dir}/_INGEST_MANIFESTS/"
             f"run_{run_tag}_batch_{batch_id:06d}.json",
@@ -269,6 +220,7 @@ def stream_kg_ingest(
              "store_layout": "bucketed" if bucketed_store
              else "legacy_unbucketed", **scan_stats},
         )
+        release_cached_deps(candidates)  # the pipeline's caches
         if on_batch is not None:
             on_batch(batch_id, n_appended)
 
@@ -282,12 +234,6 @@ def stream_kg_ingest(
     return writer.start()
 
 
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
-
-
 def migrate_store_to_buckets(
     spark: SparkSession, store_dir: str, n_buckets: int = 64
 ) -> dict:
@@ -298,40 +244,34 @@ def migrate_store_to_buckets(
     partitioned append into a root holding plain part files creates a
     mixed layout Spark refuses to read (ADVICE r4). This helper is the
     explicit migration: rewrite bucketed into a sibling _MIGRATING
-    dir, swap it into place via two FileSystem renames (old root kept
-    as _LEGACY_BACKUP until the swap succeeds), carry the
-    _INGEST_MANIFESTS dir over, then drop the backup. If the process
-    dies between the renames, the backup dir still holds the complete
-    store — recovery is renaming it back. Cost: one full scan + one
+    dir, move the _INGEST_MANIFESTS dir into it, and swap it into
+    place (sources/fs.swap_in: the old root is moved aside until the
+    new one is in, so a crash between the renames leaves the complete
+    legacy store in the aside copy; a failed rename raises IOError
+    naming it). A crash between the manifest move and the swap leaves
+    the manifests in _MIGRATING; the next run refuses to overwrite
+    them and says where they are. Cost: one full scan + one
     shuffle of the store, paid once; every subsequent micro-batch then
     prunes to touched buckets. The Iceberg analog is
     `ALTER TABLE ... REPLACE PARTITION FIELD` + rewrite."""
-    from pyspark.sql import functions as F
-
-    from ..operators.graph import TRIPLE_BUCKET_COL, with_triple_bucket
-
     cols = ["subj", "pred", "obj"]
     existing = spark.read.parquet(store_dir)
     if TRIPLE_BUCKET_COL in existing.columns:
         return {"migrated": False, "reason": "already bucketed"}
+    store = store_dir.rstrip("/")
+    tmp = store + "_MIGRATING"
+    man, parked = f"{store}/_INGEST_MANIFESTS", f"{tmp}/_INGEST_MANIFESTS"
+    fs, jman = fs_for(spark, man)
+    if fs.exists(fs_for(spark, parked)[1]):
+        raise IOError(f"{parked} holds the ingest manifests of an interrupted "
+                      f"migration: move it back to {man}, then re-run")
     n_rows = existing.count()
-    tmp = store_dir.rstrip("/") + "_MIGRATING"
-    backup = store_dir.rstrip("/") + "_LEGACY_BACKUP"
     (with_triple_bucket(existing.select(cols), n_buckets)
      .repartition(F.col(TRIPLE_BUCKET_COL))
      .write.mode("overwrite").partitionBy(TRIPLE_BUCKET_COL).parquet(tmp))
-    fs, root, jvm = _fs_for(spark, store_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
-    if not fs.rename(root, Path(backup)):
-        raise IOError(f"migration swap failed: could not move {store_dir} "
-                      f"aside to {backup}")
-    if not fs.rename(Path(tmp), root):
-        raise IOError(f"migration swap failed mid-way: store preserved at "
-                      f"{backup}; rename it back to {store_dir} to recover")
-    man = Path(backup + "/_INGEST_MANIFESTS")
-    if fs.exists(man):
-        fs.rename(man, Path(store_dir.rstrip("/") + "/_INGEST_MANIFESTS"))
-    fs.delete(Path(backup), True)
+    if fs.exists(jman):  # the swap then carries the lineage with the store
+        swap_in(spark, man, parked)
+    swap_in(spark, tmp, store)
     return {"migrated": True, "rows": n_rows, "n_buckets": n_buckets}
 
 
@@ -339,20 +279,10 @@ def store_bucket_file_counts(spark: SparkSession, store_dir: str) -> dict:
     """(bucket partition name -> parquet file count) for the bucketed
     store — the small-file observability hook compaction acts on. One
     listStatus per bucket dir; cost ∝ n_buckets, never ∝ rows."""
-    from ..operators.graph import TRIPLE_BUCKET_COL
-
-    fs, root, jvm = _fs_for(spark, store_dir)
-    prefix = f"{TRIPLE_BUCKET_COL}="
-    out: dict[str, int] = {}
-    for st in fs.listStatus(root):
-        name = str(st.getPath().getName())
-        if not name.startswith(prefix):
-            continue
-        out[name] = sum(
-            1 for f in fs.listStatus(st.getPath())
-            if str(f.getPath().getName()).startswith("part-")
-        )
-    return out
+    return {
+        name: len(ls(spark, f"{store_dir.rstrip('/')}/{name}", "part-"))
+        for name, _, _ in ls(spark, store_dir, f"{TRIPLE_BUCKET_COL}=")
+    }
 
 
 def compact_store_buckets(
@@ -369,9 +299,10 @@ def compact_store_buckets(
     batches x 10^3 buckets). This pass rewrites ONLY buckets whose
     file count exceeds ``max_files_per_bucket`` — cost ∝ oversized
     buckets, never ∝ store — into ceil(rows / target_rows_per_file)
-    files each, swapping per-bucket directories via rename with the
-    same crash-recovery shape as migrate_store_to_buckets (a bucket's
-    old files survive in _COMPACT_BACKUP until its swap completes).
+    files each, written under _COMPACT_TMP and swapped in per bucket
+    with the same protocol as migrate_store_to_buckets
+    (sources/fs.swap_in: a bucket's old files survive in a hidden
+    aside copy until its swap completes).
 
     ``compact_label_invariant=True`` additionally applies
     compact_labels (operators/graph.py) to each rewritten bucket,
@@ -388,20 +319,14 @@ def compact_store_buckets(
     file-count filter."""
     import math
 
-    from pyspark.sql import functions as F
-
-    from ..operators.graph import TRIPLE_BUCKET_COL, compact_labels
-
     counts = store_bucket_file_counts(spark, store_dir)
     oversized = {
         b: n for b, n in counts.items() if n > max_files_per_bucket
     }
-    fs, root, jvm = _fs_for(spark, store_dir)
-    Path = jvm.org.apache.hadoop.fs.Path
+    store = store_dir.rstrip("/")
     rewritten: dict[str, dict] = {}
     for bname, n_files in sorted(oversized.items()):
         bucket_id = int(bname.split("=", 1)[1])
-        bucket_dir = f"{store_dir.rstrip('/')}/{bname}"
         # partition-pruned read of exactly this bucket
         rows = spark.read.parquet(store_dir).filter(
             F.col(TRIPLE_BUCKET_COL) == bucket_id
@@ -410,22 +335,12 @@ def compact_store_buckets(
             rows = compact_labels(rows)
         n_rows = rows.count()
         n_out = max(1, math.ceil(n_rows / target_rows_per_file))
-        tmp = f"{store_dir.rstrip('/')}/_COMPACT_TMP/{bname}"
+        tmp = f"{store}/_COMPACT_TMP/{bname}"
         rows.repartition(n_out).write.mode("overwrite").parquet(tmp)
-        backup = Path(f"{store_dir.rstrip('/')}/_COMPACT_BACKUP/{bname}")
-        fs.mkdirs(backup.getParent())
-        if not fs.rename(Path(bucket_dir), backup):
-            raise IOError(f"compaction swap failed for {bname}")
-        if not fs.rename(Path(tmp), Path(bucket_dir)):
-            raise IOError(
-                f"compaction swap failed mid-way for {bname}: old files "
-                f"preserved at {backup}; rename back to recover")
-        fs.delete(backup, True)
+        swap_in(spark, tmp, f"{store}/{bname}")
         rewritten[bname] = {"files_before": n_files, "files_after": n_out}
-    for aux in ("_COMPACT_TMP", "_COMPACT_BACKUP"):
-        p = Path(f"{store_dir.rstrip('/')}/{aux}")
-        if fs.exists(p):
-            fs.delete(p, True)
+    fs, aux = fs_for(spark, f"{store}/_COMPACT_TMP")
+    fs.delete(aux, True)
     return {
         "buckets_total": len(counts),
         "buckets_rewritten": len(rewritten),
@@ -461,8 +376,6 @@ def late_tolerant_turn_counts(
     conversations before the batch operators run on complete sessions
     (Structured Streaming's session_window + withWatermark — state is
     dropped once the watermark passes the session gap)."""
-    from pyspark.sql import functions as F
-
     return (
         transcript_stream.withWatermark("ts", watermark)
         .groupBy(
@@ -529,8 +442,6 @@ def stream_exact_dedup(
     plain ``dropDuplicates`` on a stream accumulates state forever).
     The batch analog is operators/dedup.exact_dedup — same key, same
     first-wins semantics within the watermark horizon."""
-    from pyspark.sql import functions as F
-
     keyed = doc_stream.withWatermark(ts_col, watermark).withColumn(
         "_content_sha", F.sha2(F.col(text_col), 256)
     )

@@ -373,6 +373,43 @@ def test_stream_kg_ingest_idempotent_delta(spark, tmpdir_ckpt):
     assert all(m["input_rows"] > 0 for m in by_id.values())
 
 
+def test_stream_kg_ingest_releases_batch_caches(spark, tmpdir_ckpt):
+    """Each micro-batch's pipeline caches (the persisted ``ordered``
+    and ``linked`` frames) are released once its delta and manifest are
+    written: after a 2-batch stream nothing stays persisted."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from rkts_migration_spark.fixtures import (
+        TRANSCRIPT_DDL,
+        fixtures_to_spark,
+        make_fixtures,
+    )
+    from rkts_migration_spark.streaming import (
+        stream_from_directory,
+        stream_kg_ingest,
+    )
+
+    tables = fixtures_to_spark(spark, make_fixtures(seed=5, n_convs=6))
+    tr = tables.pop("transcripts")
+    convs = sorted(r[0] for r in tr.select("conv_id").distinct().collect())
+    src = os.path.join(tmpdir_ckpt, "leak_src")
+    for part in (convs[:3], convs[3:]):
+        tr.filter(F.col("conv_id").isin(part)).coalesce(1).write.mode(
+            "append").parquet(src)
+    spark.catalog.clearCache()  # earlier tests' caches are not ours
+    batches = []
+    q = stream_kg_ingest(
+        stream_from_directory(spark, src, TRANSCRIPT_DDL), tables,
+        os.path.join(tmpdir_ckpt, "leak_store"),
+        os.path.join(tmpdir_ckpt, "leak_ck"),
+        on_batch=lambda bid, n: batches.append(bid))
+    q.awaitTermination(180)
+    assert batches == [0, 1]
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
 def test_late_tolerant_turn_counts_stream(spark, tmpdir_ckpt):
     """Watermark + session_window over a file stream: out-of-order
     turns within a session aggregate into one window; a gap larger
@@ -675,6 +712,30 @@ def test_stream_kg_ingest_legacy_unbucketed_store(spark, tmpdir_ckpt):
     m = bucketed[0]
     # pruning receipts present and partial: batch touched < total
     assert 0 < m["store_buckets_read"] <= m["store_buckets_total"] == 8
+
+
+def test_migration_refuses_to_overwrite_parked_manifests(spark, tmpdir_ckpt):
+    """The migration moves _INGEST_MANIFESTS into its rewrite before the
+    swap; if a run stopped between that move and the swap, the next run
+    must not overwrite the rewrite dir (and the lineage in it)."""
+    import os
+
+    import pytest
+
+    from rkts_migration_spark.streaming.incremental import (
+        migrate_store_to_buckets,
+    )
+
+    store = os.path.join(tmpdir_ckpt, "legacy")
+    spark.createDataFrame([("s", "p", "o")], "subj string, pred string, obj string"
+                          ).write.parquet(store)
+    parked = os.path.join(store + "_MIGRATING", "_INGEST_MANIFESTS")
+    os.makedirs(parked)
+    with open(os.path.join(parked, "run_x_batch_000000.json"), "w") as f:
+        f.write("{}")
+    with pytest.raises(IOError, match="interrupted migration"):
+        migrate_store_to_buckets(spark, store, n_buckets=2)
+    assert os.listdir(parked) == ["run_x_batch_000000.json"]
 
 
 def test_compact_store_buckets_bounds_files(spark, tmpdir_ckpt):

@@ -168,3 +168,102 @@ def test_inmem_background_dimension_error_propagates(spark, fx, monkeypatch):
     # the ordered cache built before the error is released, not leaked
     # into the session
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+
+
+def test_torn_manifest_is_recomputed(spark, fx, oracle_triples, tmpdir_ckpt):
+    """Crash during a manifest write: a truncated manifest reads as
+    "not committed", so the resume recomputes from that stage on
+    instead of failing to parse it."""
+    import os
+
+    tables = fixtures_to_spark(spark, fx)
+    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a", stop_after="linked")
+    path = os.path.join(tmpdir_ckpt, "linked", "_STAGE_MANIFEST.json")
+    with open(path, "rb") as f:
+        head = f.read()[:40]
+    with open(path, "wb") as f:
+        f.write(head)
+    assert stage_manifest(tmpdir_ckpt, "linked") is None
+    res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=True)
+    assert list(res.manifests) == ["linked", "triples"]
+    p, r = precision_recall(_collect_triples(res.triples), oracle_triples)
+    assert p == 1.0 and r == 1.0
+
+
+def test_swapped_stage_without_manifest_is_recomputed(
+    spark, fx, oracle_triples, tmpdir_ckpt, monkeypatch
+):
+    """Crash between the data swap and the manifest write: the stage
+    dir is in place but has no manifest, so the resume recomputes it."""
+    import os
+
+    from rkts_migration_spark.sources import tables as T
+
+    tables = fixtures_to_spark(spark, fx)
+    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a", stop_after="mentions")
+    real = T.write_json
+
+    def killed(spark_, path, payload):
+        if payload.get("stage") == "linked":
+            raise RuntimeError("killed before the manifest")
+        real(spark_, path, payload)
+
+    monkeypatch.setattr(T, "write_json", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=True)
+    monkeypatch.undo()
+    assert os.path.isdir(os.path.join(tmpdir_ckpt, "linked"))
+    assert stage_manifest(tmpdir_ckpt, "linked") is None
+    res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="c", resume=True)
+    assert list(res.manifests) == ["linked", "triples"]
+    p, r = precision_recall(_collect_triples(res.triples), oracle_triples)
+    assert p == 1.0 and r == 1.0
+
+
+def test_leftover_tmp_does_not_break_commit(
+    spark, fx, oracle_triples, tmpdir_ckpt
+):
+    """A crashed write's half-written tmp dir does not break the next
+    write of that stage, and a successful commit over existing stages
+    leaves no tmp or moved-aside copy behind."""
+    import os
+
+    tables = fixtures_to_spark(spark, fx)
+    run_pipeline(spark, tables, tmpdir_ckpt, run_id="a")
+    junk = os.path.join(tmpdir_ckpt, "linked._tmp", "_temporary", "0")
+    os.makedirs(junk)
+    with open(os.path.join(junk, "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    res = run_pipeline(spark, tables, tmpdir_ckpt, run_id="b", resume=False)
+    p, r = precision_recall(_collect_triples(res.triples), oracle_triples)
+    assert p == 1.0 and r == 1.0
+    assert sorted(os.listdir(tmpdir_ckpt)) == sorted(STAGES)
+
+
+def test_resume_on_changed_input_files_recomputes(spark, fx, tmpdir_ckpt):
+    """A resume over the same checkpoint root with different transcript
+    files must not serve the first input's triples: each manifest
+    records the input files (length, modification time), and a
+    mismatch recomputes."""
+    import dataclasses
+    import os
+
+    from pyspark.sql import functions as F
+
+    tables = fixtures_to_spark(spark, fx)
+    convs = sorted({t["conv_id"] for t in fx.transcripts})
+    halves = {"A": set(convs[::2]), "B": set(convs[1::2])}
+    inputs = {}
+    for name, keep in halves.items():
+        d = os.path.join(tmpdir_ckpt, f"input_{name}")
+        tables["transcripts"].filter(F.col("conv_id").isin(*keep)).write.parquet(d)
+        inputs[name] = spark.read.parquet(d)
+    root = os.path.join(tmpdir_ckpt, "ckpt")
+    run_pipeline(spark, {**tables, "transcripts": inputs["A"]}, root, run_id="a")
+    res = run_pipeline(spark, {**tables, "transcripts": inputs["B"]}, root,
+                       run_id="b", resume=True)
+    want = run_oracle(dataclasses.replace(
+        fx, transcripts=[t for t in fx.transcripts
+                         if t["conv_id"] in halves["B"]]))
+    assert _collect_triples(res.triples) == want
+    assert list(res.manifests) == list(STAGES)
